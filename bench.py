@@ -966,8 +966,9 @@ def _ivfpq_lifecycle(spark, data_dir: str) -> dict | None:
 
     Best-of-2 over the WHOLE lifecycle with every run recorded
     (round 12, VERDICT r11 task 1): the r10->r11 movement (build
-    29.6->51.6 s, serve 1.99->3.37 s at 100x) was adjudicated with
-    tools/ivfpq_lifecycle_probe.py — a prior same-JVM lifecycle run
+    29.6->51.6 s, serve 1.99->3.37 s at 100x) was adjudicated by a
+    two-arm fresh-vs-warm-JVM probe (SCALE.md round 12, "IVF-PQ
+    lifecycle inflation at 100x") — a prior same-JVM lifecycle run
     gives NO speedup (arm B: sf0.1 warmup then 100x builds 37.4,
     44.5 s vs arm A fresh 39.8, 48.8, 36.2 s), refuting the
     fresh-JVM-cold-start hypothesis; the build simply swings

@@ -1692,7 +1692,7 @@ def containment_pairs_incremental(
     2 without the prefilter shuffles every corpus doc's prefix rows
     per ingest — a static OFF tuned to the registry's 20%-batch test
     shape was the wrong contract (VERDICT r8). Measured at the 100x
-    checkpoint (tools/sweep_round9.py, index serve, best-of-2, OFF
+    checkpoint (SCALE.md round 9, index serve, best-of-2, OFF
     vs ON): 20%-batch 9.79 vs 9.92 s; 5%-batch 7.25 vs 7.61 s;
     2%-batch 6.59 vs 6.68 s — a wall-clock break-even is NOT
     observable in this sandbox, because even a 2% batch of the

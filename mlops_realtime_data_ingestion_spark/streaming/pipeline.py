@@ -133,14 +133,33 @@ class StreamingPipeline:
         return writer.start()
 
     # -- the whole job ---------------------------------------------------
-    def run(self, source: DataFrame, available_now: bool = True, timeout_s: int = 300) -> None:
+    def run(
+        self, source: DataFrame, available_now: bool = True, timeout_s: float = 300
+    ) -> tuple[StreamingQuery, StreamingQuery]:
         """availableNow drains the backlog stage-by-stage and stops
-        (test/replay mode); otherwise both queries run continuously."""
+        (test/replay mode), raising if a stage fails or is still running
+        after ``timeout_s`` — the aggregate never starts over a partial
+        bronze; otherwise both queries run continuously. Returns the
+        (ingest, aggregate) query handles."""
         spark = source.sparkSession
         ingest_q = self.start_ingest(source, available_now)
-        if available_now:
-            ingest_q.awaitTermination(timeout_s)
-            agg_q = self.start_aggregate(spark, available_now=True)
-            agg_q.awaitTermination(timeout_s)
-        else:
-            self.start_aggregate(spark, available_now=False)
+        if not available_now:
+            return ingest_q, self.start_aggregate(spark, available_now=False)
+        _drain(ingest_q, timeout_s)
+        agg_q = self.start_aggregate(spark, available_now=True)
+        _drain(agg_q, timeout_s)
+        return ingest_q, agg_q
+
+
+def _drain(query: StreamingQuery, timeout_s: float) -> None:
+    """Wait for an availableNow query to finish; a query still running
+    after ``timeout_s`` is stopped and raises ``TimeoutError``, a failed
+    one re-raises its exception."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"streaming query {query.name or query.id} still running after {timeout_s}s"
+        )
+    exc = query.exception()
+    if exc is not None:
+        raise exc

@@ -192,3 +192,17 @@ def test_monitoring_alarm_and_threshold(spark):
 
     assert update_threshold(0.2, 0.24, 0.5) == pytest.approx(0.22)
     assert update_threshold(0.3, 0.24, 0.5) == 0.24  # no update on regression
+
+
+def test_replay_timeout_raises_before_aggregate(spark, tmp_path):
+    """A stage still running at the timeout is stopped and raises; the
+    aggregate never runs over a partial bronze."""
+    src = tmp_path / "src_timeout"
+    src.mkdir()
+    _write_jsonl(str(src / "a.jsonl"), [_event(i, i * 0.1) for i in range(20)])
+
+    pipe = _pipeline(tmp_path, "timeout")
+    with pytest.raises(TimeoutError):
+        pipe.run(_typed_stream(spark, str(src)), available_now=True, timeout_s=0.001)
+    assert spark.streams.active == []
+    assert not os.path.exists(os.path.join(pipe.config.checkpoint_root, "features"))
