@@ -69,8 +69,9 @@ def get_spark(
         # paths then run INTERPRETED: a multiplicative CPU-only
         # slowdown with zero spill and zero GC, exactly the round-10
         # dedup_cdc_chunks episode signature (SCALE.md round 11). 512m
-        # is headroom, not a fix — the fresh-JVM insurance rerun in
-        # bench.py is the decisive arm. Applies only when this process
+        # is headroom, not a fix — bench.py starts each scale section
+        # in a fresh JVM, so no section inherits a full code cache.
+        # Applies only when this process
         # LAUNCHES the JVM (pyspark passes builder confs to
         # spark-submit at gateway launch); a no-op on getOrCreate
         # against a live context, like driver memory above.
@@ -136,10 +137,9 @@ def hard_reset_jvm() -> None:
     That is why the round-10 ``dedup_cdc_chunks`` slow episode (98.6%
     CPU, zero spill, zero GC) survived the fresh-SESSION insurance
     rerun while a fresh bare PROCESS measured 4-6x faster on the same
-    input: the pathology lived in the JVM, not in Spark state. This is
-    the escalation arm: a same-JVM retry that stays slow, followed by
-    a fresh-JVM retry that is fast, localizes the episode to JVM
-    runtime state (SCALE.md round 11).
+    input: the pathology lived in the JVM, not in Spark state
+    (SCALE.md round 11). bench.py therefore starts each scale section
+    in a fresh JVM (``_fresh_session(hard=True)``).
 
     The gateway child process is terminated explicitly — py4j's
     ``shutdown()`` closes sockets but the JVM would otherwise linger

@@ -304,57 +304,6 @@ def test_bench_diff_runs_on_the_real_artifact(tmp_path):
 
 
 # ---------------------------------------------------------------
-# bench._pick_stages: the stage-evidence path fires only on a real
-# >=90 s slow run, so its parsing is verified deliberately against a
-# synthetic REST payload (Spark's v1 API shape, GMT timestamps).
-# ---------------------------------------------------------------
-
-def test_stage_evidence_picks_windowed_stages():
-    from bench import _pick_stages
-
-    def rec(sid, done, run_ms, gc_ms=10, name="Exchange hashpartitioning"):
-        return {
-            "stageId": sid,
-            "completionTime": done,
-            "executorRunTime": run_ms,
-            "jvmGcTime": gc_ms,
-            "executorCpuTime": run_ms * 1_000_000,
-            "memoryBytesSpilled": 0,
-            "diskBytesSpilled": 0,
-            "shuffleReadBytes": 1024,
-            "shuffleWriteBytes": 2048,
-            "numCompleteTasks": 32,
-            "name": name + "\nplan details to truncate",
-        }
-
-    # window [1000, 1100] epoch; stage at 950 is out, 1050 is in,
-    # malformed/missing timestamps are skipped, ordering is by run_ms
-    import datetime as dt
-
-    def gmt(epoch):
-        return (
-            dt.datetime.fromtimestamp(epoch, dt.timezone.utc)
-            .strftime("%Y-%m-%dT%H:%M:%S.123") + "GMT"
-        )
-
-    stages = [
-        rec(1, gmt(950), 99999),          # before window (even with -5 slack: 950 < 995)
-        rec(2, gmt(1050), 5000),
-        rec(3, gmt(1060), 80000, name="WholeStageCodegen"),
-        rec(4, None, 70000),              # no completion time
-        rec(5, "garbage", 60000),         # malformed
-        rec(6, gmt(1099), 100),
-    ]
-    got = _pick_stages(stages, 1000.0, 1100.0, max_stages=2)
-    assert [g["stage"] for g in got] == [3, 2]  # run-time ordered, capped
-    assert got[0]["name"] == "WholeStageCodegen"  # first line only
-    assert got[0]["cpu_ms"] == 80000 and got[0]["tasks"] == 32
-    # boundary slack: completion 4 s after t_end still counts
-    got2 = _pick_stages([rec(7, gmt(1104), 10)], 1000.0, 1100.0)
-    assert [g["stage"] for g in got2] == [7]
-
-
-# ---------------------------------------------------------------
 # Plan-shape pin for the 64-bit row (the same zero-suspect-broadcast
 # contract as the other simhash rows — a 20-keys/doc band frame
 # statically broadcast is the 100x OOM class) and the shuffle_hash
@@ -369,87 +318,6 @@ def test_simhash64_plan_budget(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert flagged_broadcasts(plan) == []
     assert "ShuffledHashJoin" in plan  # the hinted band join held
-
-
-# ---------------------------------------------------------------
-# The insurance-rerun path itself (VERDICT r9 task 1c), driven with
-# cap_s=0 so the slow branch executes: stage evidence captured (None
-# without the UI — fine), a fresh session obtained via the injected
-# factory, the retry recorded, and the min returned.
-# ---------------------------------------------------------------
-
-def test_scale100_insurance_rerun_path(spark, sf_dir):
-    from bench import _time_scale100_query
-    from mlops_realtime_data_ingestion_spark.plans.registry import all_specs
-
-    spec = all_specs()["p1_dedup_keep_first"]
-    fresh_calls, jvm_calls = [], []
-
-    def fake_fresh():
-        fresh_calls.append(1)
-        return spark  # same session stands in for the rebuilt one
-
-    def fake_fresh_jvm():
-        jvm_calls.append(1)
-        return spark
-
-    warmed = []
-    s2, best, rec = _time_scale100_query(
-        spark, spec, sf_dir, cap_s=0.0,
-        fresh_fn=fake_fresh, warm_fn=lambda sp, d: warmed.append(d),
-        fresh_jvm_fn=fake_fresh_jvm,
-    )
-    # cap_s=0: the same-JVM retry is >= cap too, so the round-11
-    # escalation fires the fresh-JVM arm as well (both warm the dir)
-    assert s2 is spark and fresh_calls == [1] and jvm_calls == [1]
-    assert warmed == [sf_dir, sf_dir]
-    assert rec is not None
-    assert rec["first_sec"] > 0 and rec["fresh_retry_sec"] > 0
-    assert rec["fresh_jvm_retry_sec"] > 0
-    assert best == pytest.approx(
-        min(
-            rec["first_sec"],
-            rec["fresh_retry_sec"],
-            rec["fresh_jvm_retry_sec"],
-        ),
-        abs=0.01,
-    )
-    assert "slow_run_stages" in rec  # None here (UI off) — key present
-    # JVM evidence recorded at the slow run (live session -> real dict)
-    assert rec["jvm_health_at_slow"] is not None
-    assert "code_cache" in rec["jvm_health_at_slow"]
-
-    # fast path: generous cap -> best-of-2 in the same session, no record
-    s3, best2, rec2 = _time_scale100_query(spark, spec, sf_dir, cap_s=1e9)
-    assert s3 is spark and rec2 is None and best2 > 0
-
-
-def test_scale100_retry_failure_returns_live_session(spark, sf_dir):
-    """ADVICE r10 (medium): a raise inside the retry machinery used to
-    propagate before main()'s `spark` was rebound, leaving the loop
-    with a stopped session and a silently truncated artifact. Now the
-    first_sec is kept, the error is recorded, and the returned session
-    is live."""
-    from bench import _time_scale100_query
-    from mlops_realtime_data_ingestion_spark.plans.registry import all_specs
-
-    spec = all_specs()["p1_dedup_keep_first"]
-
-    def exploding_fresh():
-        raise RuntimeError("boom during rebuild")
-
-    s2, best, rec = _time_scale100_query(
-        spark, spec, sf_dir, cap_s=0.0,
-        fresh_fn=exploding_fresh, warm_fn=lambda sp, d: None,
-        fresh_jvm_fn=lambda: spark,
-    )
-    # the active session is handed back, the slow number survives
-    assert s2 is spark
-    assert best == pytest.approx(rec["first_sec"], abs=0.01)
-    assert rec["fresh_retry_sec"] is None
-    assert "boom during rebuild" in rec["retry_error"]
-    # and the session is actually usable
-    assert s2.range(3).count() == 3
 
 
 def test_jvm_health_probe(spark):
@@ -475,39 +343,6 @@ def test_jvm_health_probe(spark):
             raise RuntimeError("stopped")
 
     assert _jvm_health(_Dead()) is None
-
-
-def test_pick_stages_cpu_per_row():
-    """Round-11 stage-evidence fields: record counts and CPU-per-krow
-    so an episode shows up as a per-row CPU anomaly."""
-    import datetime as dt
-
-    from bench import _pick_stages
-
-    def gmt(epoch):
-        return (
-            dt.datetime.fromtimestamp(epoch, dt.timezone.utc)
-            .strftime("%Y-%m-%dT%H:%M:%S.123") + "GMT"
-        )
-
-    rec = {
-        "stageId": 9,
-        "completionTime": gmt(1050),
-        "executorRunTime": 4000,
-        "jvmGcTime": 5,
-        "executorCpuTime": 4_000 * 1_000_000,
-        "inputRecords": 1_000_000,
-        "shuffleWriteRecords": 250_000,
-        "name": "WholeStageCodegen (3)\ndetails",
-        "numCompleteTasks": 32,
-    }
-    got = _pick_stages([rec], 1000.0, 1100.0)
-    assert got[0]["rows"] == 1_000_000  # max of the record streams
-    assert got[0]["cpu_ms_per_krow"] == pytest.approx(4.0)
-    # zero-row stage: ratio is None, not a ZeroDivisionError
-    rec2 = dict(rec, stageId=10, inputRecords=0, shuffleWriteRecords=0)
-    got2 = _pick_stages([rec2], 1000.0, 1100.0)
-    assert got2[0]["rows"] == 0 and got2[0]["cpu_ms_per_krow"] is None
 
 
 def test_simhash64_index_serve_matches_oracle_and_incremental(spark, sf_dir):

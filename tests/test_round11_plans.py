@@ -4,9 +4,9 @@ fresh-JVM escalation wiring (SCALE.md round 11; VERDICT r10 task 1).
 
 The escalation RUNTIME path (hard_reset_jvm tearing down the py4j
 gateway) is deliberately NOT executed inside this suite — it would
-kill the shared session fixture's JVM; it is exercised by injected
-fakes in test_round10_plans.py::test_scale100_insurance_rerun_path
-and was verified live this round (SCALE.md round-11 chain experiment:
+kill the shared session fixture's JVM; its bench wiring is exercised
+by injected fakes in test_fresh_session_hard_flag below, and it was
+verified live this round (SCALE.md round-11 chain experiment:
 prefix -> fresh-session 9.9 s -> fresh-JVM 10.6 s, and five separate
 fresh JVMs all landing 11-18 s on the 100x cdc input).
 """

@@ -1,5 +1,5 @@
-"""Round-12 pins: ADVICE r11 fixes + the per-row episode trigger and
-the Arrow chunking-family extensions (VERDICT r11 tasks 2-3)."""
+"""Round-12 pins: ADVICE r11 fixes and the Arrow chunking-family
+extensions (VERDICT r11 task 3)."""
 
 from __future__ import annotations
 
@@ -37,76 +37,6 @@ def test_data_token_sees_partitioned_inplace_rewrite(tmp_path):
 
     # and stability: re-stat without changes -> identical token
     assert data_token(str(tmp_path), "documents") == t2
-
-
-# ---------------------------------------------------------------
-# VERDICT r11 task 2: the per-row episode trigger replaces the fixed
-# 90 s insurance cap. Thresholds pinned here like the superlinear
-# rule: 3x the row's own prior-round best, floor 15 s, 90 s backstop.
-# ---------------------------------------------------------------
-
-def test_episode_cap_thresholds():
-    from bench import (
-        EPISODE_FLOOR_S,
-        EPISODE_MEDIAN_FACTOR,
-        SCALE100_RERUN_CAP_S,
-        episode_cap_s,
-    )
-
-    assert EPISODE_MEDIAN_FACTOR == 3.0
-    assert EPISODE_FLOOR_S == 15.0
-    assert SCALE100_RERUN_CAP_S == 90.0
-
-    # no prior (first round / new query) -> old backstop behavior
-    assert episode_cap_s(None) == 90.0
-    assert episode_cap_s(0.0) == 90.0
-    assert episode_cap_s(-1.0) == 90.0
-    # sub-5 s steady states get the floor, not 3x jitter sensitivity
-    assert episode_cap_s(2.5) == 15.0
-    assert episode_cap_s(4.9) == 15.0
-    # mid-range rows get 3x their own prior — the 30-89 s window the
-    # fixed cap missed (r11 run 3: dedup_containment_incremental
-    # 42.6 s vs its ~13 s steady state -> cap 39 would have fired)
-    assert episode_cap_s(10.0) == 30.0
-    assert episode_cap_s(13.0) == 39.0
-    assert episode_cap_s(20.0) == 60.0
-    # a prior that was ITSELF an episode clamps at the backstop
-    assert episode_cap_s(45.0) == 90.0
-    assert episode_cap_s(1000.0) == 90.0
-
-
-def test_prior_scale100_loader(tmp_path, monkeypatch):
-    import bench
-
-    # loader reads BENCH_DETAIL.json next to bench.py; point it at a
-    # temp copy via __file__ monkeypatching
-    detail = tmp_path / "BENCH_DETAIL.json"
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-
-    # absent file -> empty (backstop everywhere)
-    assert bench._prior_scale100_queries() == {}
-
-    import json
-
-    detail.write_text(json.dumps({
-        "scale100": {
-            "factor_vs_sf": 100.0,
-            "queries": {"q_fast": 2.5, "q_mid": 20.0, "q_bad": -1,
-                        "q_str": "nan"},
-        }
-    }))
-    got = bench._prior_scale100_queries()
-    assert got == {"q_fast": 2.5, "q_mid": 20.0}
-
-    # wrong scale factor -> priors are incomparable -> empty
-    detail.write_text(json.dumps({
-        "scale100": {"factor_vs_sf": 10.0, "queries": {"q": 5.0}}
-    }))
-    assert bench._prior_scale100_queries() == {}
-
-    # corrupt file -> empty, never a crash
-    detail.write_text("{not json")
-    assert bench._prior_scale100_queries() == {}
 
 
 # ---------------------------------------------------------------
@@ -267,18 +197,43 @@ def test_registry_shingle_rows_run_measured_impl(spark, sf_dir):
 
 def test_ivfpq_lifecycle_records_both_runs(spark, sf_dir):
     """VERDICT r11 task 1 defense: the lifecycle was the last
-    headline-adjacent number drawn once per artifact. It now runs the
+    headline-adjacent number drawn once per artifact. It runs the
     whole build+serve cycle twice and records every draw next to the
     best, so an out-of-band draw (the adjudicated 36-49 s build swing
-    band, SCALE.md round 12) is visible inside the artifact."""
-    from bench import _ivfpq_lifecycle
+    band, SCALE.md round 12) is visible inside the artifact; each
+    serve draw keeps its per-run records with stage counters."""
+    from pyspark.sql import functions as F
 
-    rec = _ivfpq_lifecycle(spark, sf_dir)
-    assert rec is not None
+    from bench import _lifecycle
+    from mlops_realtime_data_ingestion_spark.operators.similarity import (
+        ivfpq_build,
+        ivfpq_search,
+    )
+    from mlops_realtime_data_ingestion_spark.sources.batch import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.filter(F.col("vec_id") < 5)
+    built = []
+
+    def build(idx):
+        built.append(idx)
+        ivfpq_build(emb, idx, dim=64, coarse_k=4, m=4, pq_k=4, iters=2)
+
+    rec = _lifecycle(
+        spark,
+        build,
+        lambda idx: ivfpq_search(spark, idx, probes, dim=64, m=4, nprobe=2, k=5),
+        2,
+    )
     assert len(rec["build_runs"]) == 2 and len(rec["serve_runs"]) == 2
     assert rec["build_sec"] == min(rec["build_runs"])
     assert rec["serve_sec"] == min(rec["serve_runs"])
     assert all(v > 0 for v in rec["build_runs"] + rec["serve_runs"])
+    # each build draw gets its own directory, removed afterwards
+    assert len(set(built)) == 2 and not any(os.path.exists(d) for d in built)
+    for draw, best in zip(rec["runs"], rec["serve_runs"]):
+        assert len(draw) == 2 and best == min(r["run_s"] for r in draw)
+        assert all(r["jobs"] >= 1 and r["stages"] >= 1 for r in draw)
 
 
 # ---------------------------------------------------------------

@@ -132,14 +132,26 @@ def test_bench_compact_line_stays_under_driver_cap():
     # worst-case float widths
     q = {name: 123.456 for name in HEADLINE}
     cal = {"agg_sec": 12345.678, "sort_sec": 12345.678}
+    # per-run records stay in the detail file, never in the line
+    run = {"build_s": 123.456, "eager_jobs": 999, "run_s": 123.456,
+           "jobs": 999, "stages": 9999, "tasks": 99999, "cpu_s": 12345.678,
+           "input_rows": 10**12}
+    runs = {name: [run] * 3 for name in HEADLINE}
+    errors = {name: "Py4JJavaError: " + "x" * 480 for name in list(q)[:3]}
     full = {
         "metric": "headline_queries_total",
         "value": 9999.999,
         "unit": "sec",
         "total_serve_sec": 9999.999,
+        "build_total_sec": 99999.999,
+        "eager_jobs": 99999,
         "calibration": cal,
         "queries": q,
+        "build": q,
+        "runs": runs,
+        "errors": {},
         "streaming_e2e_sec": 123.456,
+        "streaming_e2e_runs": [123.456, 123.456],
         "live_freshness_sec": 123.4,
         "scaled": {
             "total_sec": 99999.999,
@@ -147,17 +159,22 @@ def test_bench_compact_line_stays_under_driver_cap():
             "calibration": cal,
             "superlinear": {},
             "queries": q,
+            "build": q,
+            "runs": runs,
+            "errors": errors,
+            "dedup_semdedup_scaled": {"error": "RuntimeError: " + "y" * 480},
         },
         "scale100": {
             "total_sec": 99999.999,
             "total_serve_sec": 99999.999,
             "calibration": cal,
             "queries": q,
-            "slow_mode_retries": {
-                name: {"first_sec": 123.456, "fresh_retry_sec": 12.345}
-                for name in list(q)[:6]
-            },
-            "ivfpq_lifecycle": {"build_sec": 12345.678, "serve_sec": 12345.678},
+            "build": q,
+            "runs": runs,
+            "errors": errors,
+            "ivfpq_lifecycle": {"build_sec": 12345.678, "serve_sec": 12345.678,
+                                "build_runs": [12345.678] * 2,
+                                "runs": [[run] * 2] * 2},
         },
         "sf": 0.1,
     }
@@ -165,6 +182,10 @@ def test_bench_compact_line_stays_under_driver_cap():
     assert len(line) <= 1900
     parsed = json.loads(line)
     assert parsed["value"] == 9999.999 and parsed["n_queries"] == len(HEADLINE)
+    assert parsed["build_total_sec"] == 99999.999 and parsed["eager_jobs"] == 99999
+    # 3 + 3 failed queries and one failed section
+    assert parsed["errors"] == 7
+    assert parsed["ivfpq_lifecycle"] == {"build_sec": 12345.678, "serve_sec": 12345.678}
 
     # pathological: a superlinear map naming half the registry still
     # triggers the trim fallback rather than overflowing

@@ -1,16 +1,16 @@
 """Per-query measurement probe for optimization rounds (guide §1).
 
-Times named registry queries at a given data dir through the noop sink
-(best-of-N in one warmed session, like bench.py's methodology), with
-optional stage-level attribution from the UI REST API and optional
-formatted-plan capture.
+Times named registry queries at a given data dir with bench.py's
+``_timed`` (best-of-N noop-sink writes in one warmed session), so every
+run carries its build time, eager jobs and the write's stage counters.
+Optionally captures each query's formatted plan.
 
 Usage:
   python tools/query_probe.py DATA_DIR QUERY [QUERY...] [--runs N]
-      [--plan-dir DIR] [--stages]
+      [--plan-dir DIR] [--plan-suffix SUFFIX]
 
 Prints one JSON line per query:
-  {"query": ..., "runs": [...], "best": ..., "stages": [...]}
+  {"query": ..., "best": ..., "build": ..., "runs": [{per-run record}, ...]}
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -31,15 +31,13 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--plan-dir", default=None)
     ap.add_argument("--plan-suffix", default="")
-    ap.add_argument("--stages", action="store_true")
     args = ap.parse_args()
 
-    from bench import _stage_evidence, _warm_scan, _warm_session
+    from bench import _timed, _warm_scan, _warm_session
     from mlops_realtime_data_ingestion_spark.plans.registry import all_specs
     from mlops_realtime_data_ingestion_spark.session import get_spark
 
-    extra = {"spark.ui.enabled": "true"} if args.stages else None
-    spark = get_spark("query-probe", extra_conf=extra)
+    spark = get_spark("query-probe")
     _warm_session(spark)
     _warm_scan(spark, args.data_dir)
     specs = all_specs()
@@ -51,18 +49,13 @@ def main() -> int:
             print(json.dumps({"query": name, "error": "unknown"}))
             rc = 1
             continue
-        spark.sparkContext.setJobDescription(f"probe: {name}")
-        runs: list[float] = []
-        w0 = time.time()
-        for _ in range(args.runs):
-            df = spec.fn(spark, args.data_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        w1 = time.time()
-        rec: dict = {"query": name, "runs": runs, "best": min(runs)}
-        if args.stages:
-            rec["stages"] = _stage_evidence(w0, w1, max_stages=8)
+        rec: dict = {
+            "query": name,
+            **_timed(
+                spark, partial(spec.fn, spark, args.data_dir), args.runs,
+                f"probe:{name}",
+            ),
+        }
         if args.plan_dir:
             os.makedirs(args.plan_dir, exist_ok=True)
             df = spec.fn(spark, args.data_dir)
@@ -75,7 +68,6 @@ def main() -> int:
             with open(out, "w") as f:
                 f.write(plan)
             rec["plan"] = out
-        spark.sparkContext.setJobDescription(None)
         print(json.dumps(rec), flush=True)
     return rc
 
