@@ -38,12 +38,6 @@ def streaming_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division of the exact sum, and the wall-clock event_time
     stamp is not part of the result."""
     tmp = tempfile.mkdtemp(prefix="spark_stream_e2e_")
-    # streaming state partitions are fixed at first checkpoint: pin to
-    # the core count rather than inheriting a harness default of 200
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("ts") < F.lit("2024-01-04 00:00:00")
     )
@@ -73,10 +67,7 @@ def streaming_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             bronze_path=f"{tmp}/bronze",
         )
     )
-    try:
-        pipe.run(typed, available_now=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    pipe.run(typed, available_now=True)
     return pipe.store.online_view(spark).select(
         "tx_minute",
         "total_nb_trx_1min",

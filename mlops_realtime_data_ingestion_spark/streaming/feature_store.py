@@ -63,7 +63,12 @@ class FeatureStore:
         idempotent. Each put commits a versioned manifest (the added
         file list) enabling :meth:`offline` time travel — the
         commit-log shape a Delta/Iceberg table gets from its format
-        (on those backends this is the transaction log itself)."""
+        (on those backends this is the transaction log itself).
+
+        Callers pass non-empty batches: each call commits exactly one
+        version, so on a fresh store the n-th put is version n. The
+        streaming sink counts its cached batch first and skips empty
+        ones."""
         cols = batch.columns
         if self.event_time_col not in cols:
             batch = batch.withColumn(

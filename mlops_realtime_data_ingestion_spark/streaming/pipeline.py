@@ -29,10 +29,20 @@ Semantics mapping (SURVEY.md §2.8):
 - T3 idle-source timeout: not needed — micro-batch watermarks advance
   from observed max event time per batch (documented delta).
 
-Scale: the dedup shuffle keys on the tx hash (uniform), the agg
-shuffle on the minute bucket; state is per-partition (RocksDB/HDFS
-at cluster scale); bronze decouples the two stages' backpressure.
-No driver state anywhere.
+Scale: each query runs its stateful operator on ``STATE_PARTITIONS``
+(one) state partitions. The reference's traffic is about 400 tx/min
+(BASELINE.md), so 3 h of dedup state is about 72k hashes, and the
+window aggregate never holds more than 3 open minutes; more partitions
+would only add tasks, state delta files and parquet part files to
+every trigger. Spark records the count in the checkpoint when a query
+first starts, and a restart keeps the recorded count, so checkpoints
+written with another count still resume. The caller's
+``spark.sql.shuffle.partitions`` is set only around ``start()`` and
+then restored. ``foreachBatch`` runs on every trigger, so the sink
+evaluates each aggregate micro-batch once: it caches the batch, counts
+it, and hands the cached frame to ``put_batch`` only when it has rows.
+Bronze decouples the two stages' backpressure. No driver state
+anywhere.
 """
 
 from __future__ import annotations
@@ -42,11 +52,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from .feature_store import FeatureStore
 
 __all__ = ["StreamingPipeline", "PipelineConfig"]
+
+STATE_PARTITIONS = 1  # ~400 tx/min: 3 h of dedup is ~72k hashes, the window <= 3 open minutes
 
 
 @dataclass
@@ -109,7 +121,7 @@ class StreamingPipeline:
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return _start(source.sparkSession, writer)
 
     # -- query 2: bronze -> windowed agg -> feature store ---------------
     def start_aggregate(self, spark: SparkSession, available_now: bool = False) -> StreamingQuery:
@@ -118,9 +130,15 @@ class StreamingPipeline:
         bronze = spark.readStream.schema(schema).parquet(c.bronze_path)
 
         def upsert(batch: DataFrame, batch_id: int) -> None:
-            if batch.isEmpty():
-                return
-            self.store.put_batch(batch)
+            # one evaluation of the stateful stage: the count fills the
+            # cache that put_batch then reads
+            batch.persist()
+            try:
+                if batch.count() == 0:
+                    return
+                self.store.put_batch(batch)
+            finally:
+                batch.unpersist()
 
         writer = (
             self.aggregated(bronze)
@@ -130,7 +148,7 @@ class StreamingPipeline:
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return _start(spark, writer)
 
     # -- the whole job ---------------------------------------------------
     def run(
@@ -149,6 +167,19 @@ class StreamingPipeline:
         agg_q = self.start_aggregate(spark, available_now=True)
         _drain(agg_q, timeout_s)
         return ingest_q, agg_q
+
+
+def _start(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with ``STATE_PARTITIONS`` shuffle partitions.
+    The query clones the session conf when it is constructed inside
+    ``start()``, so the caller's value is restored right after."""
+    conf = spark.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", STATE_PARTITIONS)
+    try:
+        return writer.start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _drain(query: StreamingQuery, timeout_s: float) -> None:

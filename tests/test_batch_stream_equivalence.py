@@ -38,15 +38,8 @@ def test_streaming_backlog_equals_batch_agg(spark, tmp_path):
         .json(str(src))
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
     pipe = _pipeline(tmp_path, "equiv")
-    try:
-        pipe.run(_typed_stream(spark, str(src)), available_now=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
 
     streamed = {
         r["tx_minute"]: r

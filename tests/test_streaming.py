@@ -4,11 +4,13 @@ idempotent upsert, checkpoint restart, late-data drop."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mlops_realtime_data_ingestion_spark.streaming.feature_store import FeatureStore
 from mlops_realtime_data_ingestion_spark.streaming.pipeline import (
@@ -206,3 +208,87 @@ def test_replay_timeout_raises_before_aggregate(spark, tmp_path):
         pipe.run(_typed_stream(spark, str(src)), available_now=True, timeout_s=0.001)
     assert spark.streams.active == []
     assert not os.path.exists(os.path.join(pipe.config.checkpoint_root, "features"))
+
+
+def test_one_state_partition_caller_conf_untouched(spark, tmp_path, monkeypatch):
+    """Each query records one state partition in its checkpoint, and the
+    caller's shuffle-partition setting survives both a run and a failed
+    start."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    src = tmp_path / "src_parts"
+    src.mkdir()
+    rows = [_event(i, i * 0.5) for i in range(12)] + [_event(99, 20.0)]
+    _write_jsonl(str(src / "a.jsonl"), rows)
+
+    pipe = _pipeline(tmp_path, "parts")
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    offsets = sorted(glob.glob(os.path.join(pipe.config.checkpoint_root, "*", "offsets", "0")))
+    assert [p.split(os.sep)[-3] for p in offsets] == ["bronze", "features"]
+    for path in offsets:
+        with open(path) as f:
+            assert '"spark.sql.shuffle.partitions":"1"' in f.read(), path
+
+    def fail_start(self):
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", fail_start)
+    with pytest.raises(RuntimeError, match="start failed"):
+        pipe.start_ingest(_typed_stream(spark, str(src)))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    with pytest.raises(RuntimeError, match="start failed"):
+        pipe.start_aggregate(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_sink_gets_cached_non_empty_batches_one_version_each(spark, tmp_path):
+    """Every put_batch call receives a cached, non-empty aggregate batch
+    and commits exactly one store version with at least one file."""
+    src = tmp_path / "src_sink"
+    src.mkdir()
+    pipe = _pipeline(tmp_path, "sink")
+    calls = []
+    put = pipe.store.put_batch
+
+    def recording_put(df):
+        calls.append((df.is_cached, df.count()))
+        put(df)
+
+    pipe.store.put_batch = recording_put
+    # three restarts on one checkpoint, each finalizing new minutes
+    for k in range(3):
+        rows = [_event(100 * k + i, 10 * k + i * 0.4) for i in range(10)]
+        rows.append(_event(100 * k + 99, 10 * k + 8.0))
+        _write_jsonl(str(src / f"{k}.jsonl"), rows)
+        pipe.run(_typed_stream(spark, str(src)), available_now=True)
+
+    assert len(calls) >= 3
+    assert all(cached and n > 0 for cached, n in calls), calls
+    versions = pipe.store.versions()
+    assert len(versions) == len(calls)
+    files = [len(pipe.store.backend.files_as_of(pipe.store.path, v)) for v in versions]
+    assert all(b > a for a, b in zip([0, *files], files)), files
+
+
+def test_restart_keeps_checkpointed_partition_count(spark, tmp_path, monkeypatch):
+    """A checkpoint written with another partition count resumes with
+    that count, and the resumed run still finalizes its windows."""
+    from mlops_realtime_data_ingestion_spark.streaming import pipeline as pipeline_mod
+
+    src = tmp_path / "src_resume"
+    src.mkdir()
+    _write_jsonl(str(src / "a.jsonl"), [_event(i, i * 0.3, 5.0) for i in range(10)] + [_event(90, 10.0)])
+    with monkeypatch.context() as m:
+        m.setattr(pipeline_mod, "STATE_PARTITIONS", 3)
+        _pipeline(tmp_path, "resume").run(_typed_stream(spark, str(src)), available_now=True)
+
+    _write_jsonl(str(src / "b.jsonl"), [_event(100 + i, 11 + i * 0.3, 7.0) for i in range(10)] + [_event(91, 20.0)])
+    pipe = _pipeline(tmp_path, "resume")
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
+    for query in ("bronze", "features"):
+        offsets = os.path.join(pipe.config.checkpoint_root, query, "offsets")
+        last = max(os.listdir(offsets), key=lambda n: int(n) if n.isdigit() else -1)
+        with open(os.path.join(offsets, last)) as f:
+            assert '"spark.sql.shuffle.partitions":"3"' in f.read(), (query, last)
+    got = {r["tx_minute"].minute: r["total_nb_trx_1min"] for r in pipe.store.online_view(spark).collect()}
+    assert got[0] == 4 and got[11] == 4, got
