@@ -585,7 +585,7 @@ def substring_index_update(
     incremental run pairs each position with its own copy (d1 == d2,
     diag 0), fabricating whole-doc duplicate spans for the
     re-appended docs. Drive it from an exactly-once orchestration
-    (the engine's manifest StorageBackend publishes atomically), or
+    (the engine's ``ParquetManifestBackend`` publishes atomically), or
     pass ``dedup_index=True`` to
     :func:`duplicate_substring_chains_incremental` to pay one
     (id, p) dropDuplicates shuffle per serve as the defense."""

@@ -332,7 +332,7 @@ def _argmin_assign(
     is PARTIAL — the k candidate rows per point collapse map-side, the
     exchange carries one narrow row per point instead of k
     vector-carrying rows, and the two sorts + WindowGroupLimit
-    disappear (guide §2.3/§2.4; plan diff in plans/r12). ``dim``
+    disappear from the physical plan (guide §2.3/§2.4). ``dim``
     selects the codegen flat distance; None keeps the interpreted
     fold (callers that cannot guarantee array lengths)."""
     d = (

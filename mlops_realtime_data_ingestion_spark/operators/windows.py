@@ -4,8 +4,11 @@ Reference parity (SURVEY.md §2.4, §2.8): PyFlink tumbling window at
 resources/flink/main.py:105-120 —
 ``Tumble.over(lit(1).minute).on(col("tx_time")).alias("tx_minute")``
 then ``count(hash), sum(fee), avg(fee)`` — with a 60 s watermark
-(main.py:77). Works identically on batch and streaming DataFrames
-(streaming adds ``withWatermark`` upstream; see streaming/pipeline.py).
+(main.py:77). ``tumbling_agg`` is the engine's only spelling of that
+feature: the streaming pipeline calls it on its watermarked bronze
+stream (``StreamingPipeline.aggregated``) and the gap backfill on its
+gap-filtered bronze rows (``backfill_gaps``), so stream and batch share
+one definition.
 
 Scale note: a windowed group-by is one shuffle keyed on the window
 bucket. Partial (map-side) aggregation means each input partition
@@ -19,15 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["tumbling_agg", "sliding_agg", "session_agg", "minute_bucket_agg"]
+__all__ = ["tumbling_agg", "session_agg"]
 
 
 def tumbling_agg(
-    df: DataFrame,
-    ts_col: str = "tx_time",
-    key_col: str = "hash",
-    val_col: str = "fee",
-    duration: str = "1 minute",
+    df: DataFrame, ts_col: str, key_col: str, val_col: str, duration: str = "1 minute"
 ) -> DataFrame:
     """A1-A5: 1-minute tumbling window -> count/sum/avg.
 
@@ -50,22 +49,6 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    df: DataFrame,
-    ts_col: str,
-    val_col: str,
-    duration: str = "10 minutes",
-    slide: str = "5 minutes",
-) -> DataFrame:
-    """Sliding (hopping) window variant — inventory completeness for
-    Flink's window family (SURVEY.md §2.8 T3 note)."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), duration, slide).alias("w"))
-        .agg(F.count("*").alias("n"), F.avg(val_col).alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), F.col("w.end").alias("window_end"), "n", "avg_value")
-    )
-
-
 def session_agg(
     df: DataFrame, ts_col: str, key_col: str, gap: str = "5 minutes"
 ) -> DataFrame:
@@ -74,19 +57,4 @@ def session_agg(
         df.groupBy(key_col, F.session_window(F.col(ts_col), gap).alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(key_col, F.col("w.start").alias("session_start"), F.col("w.end").alias("session_end"), "n_events")
-    )
-
-
-def minute_bucket_agg(df: DataFrame, ts_col: str, val_col: str) -> DataFrame:
-    """A6: the legacy Kinesis-Analytics form ``GROUP BY FLOOR(ROWTIME TO
-    MINUTE)`` (resources/kinesis/analytics.sql:7-14) as a batch
-    ``date_trunc`` — same result as ``tumbling_agg`` for 1-minute
-    buckets; kept as the batch-replay spelling."""
-    return (
-        df.groupBy(F.date_trunc("minute", F.col(ts_col)).alias("tx_minute"))
-        .agg(
-            F.count("*").alias("total_nb_trx_1min"),
-            F.sum(val_col).alias("total_fee_1min"),
-            F.avg(val_col).alias("avg_fee_1min"),
-        )
     )

@@ -580,10 +580,10 @@ def forecast_backtest_rmse_wql(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 12 (guide §2.4): the tail_split -> seasonal_naive_forecast
     -> truth-join composition re-derived the same ranked frame four
     times — four parquet scans, four user_id exchanges, nine Window
-    nodes (plans/r12/forecast_backtest_rmse_wql_before.txt). This
-    spelling computes the ranked frame ONCE and collapses every
-    per-series lookup into one groupBy(user_id) that reuses the
-    window's partitioning (no second exchange):
+    nodes in the optimized plan. This spelling computes the ranked
+    frame ONCE and collapses every per-series lookup into one
+    groupBy(user_id) that reuses the window's partitioning (no second
+    exchange):
 
     - train membership is rn <= n-3 (the tail split on a prefix), so
       the seasonal differences of the TRAIN series equal the global

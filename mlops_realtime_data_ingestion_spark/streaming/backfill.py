@@ -5,8 +5,9 @@ The reference recovers from aggregation outages by replaying the whole
 Kinesis retention window through Flink; with a bronze archive the
 batch engine can do better: diff the minutes PRESENT in bronze against
 the minutes the feature store already holds, recompute ONLY the
-missing windows with the exact batch equivalent of the streaming
-aggregation (batch/stream equivalence is separately tested), and
+missing windows with the streaming aggregation's own definition
+(``tumbling_agg``, run as a batch; backfill/stream agreement is
+tested), and
 upsert them.  Cost tracks the gap count — bronze is scanned once with
 a minute-key semi-join (partition/row-group pruning applies), the
 store only for its distinct keys.
@@ -17,17 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import tumbling_agg
 from .feature_store import FeatureStore
+from .pipeline import KEY_COL, TS_COL, VAL_COL
 
 __all__ = ["find_gaps", "backfill_gaps"]
 
 
-def find_gaps(
-    spark: SparkSession, store: FeatureStore, bronze: DataFrame, ts_col: str = "tx_time"
-) -> DataFrame:
+def find_gaps(spark: SparkSession, store: FeatureStore, bronze: DataFrame) -> DataFrame:
     """Minutes with bronze data but no feature-store row."""
     expected = bronze.select(
-        F.date_trunc("minute", F.col(ts_col)).alias("tx_minute")
+        F.date_trunc("minute", F.col(TS_COL)).alias("tx_minute")
     ).distinct()
     if not store.exists():
         return expected
@@ -37,32 +38,21 @@ def find_gaps(
     )
 
 
-def backfill_gaps(
-    spark: SparkSession,
-    store: FeatureStore,
-    bronze: DataFrame,
-    ts_col: str = "tx_time",
-    val_col: str = "fee",
-    key_col: str = "hash",
-) -> int:
+def backfill_gaps(spark: SparkSession, store: FeatureStore, bronze: DataFrame) -> int:
     """Recompute and upsert every missing minute; returns the number
-    of windows repaired.  The aggregation is the batch spelling of the
-    pipeline's 1-minute window (same output schema), restricted to gap
-    minutes via a broadcast-friendly semi-join."""
-    gaps = find_gaps(spark, store, bronze, ts_col).persist()
+    of windows repaired.  The aggregation is the pipeline's own
+    ``tumbling_agg`` (the session is UTC, so a window start equals the
+    ``date_trunc`` minute), restricted to gap minutes via a
+    broadcast-friendly semi-join."""
+    gaps = find_gaps(spark, store, bronze).persist()
     try:
         n = gaps.count()  # bounded: one count of the gap key set
         if n == 0:
             return 0
         rows = bronze.withColumn(
-            "tx_minute", F.date_trunc("minute", F.col(ts_col))
+            "tx_minute", F.date_trunc("minute", F.col(TS_COL))
         ).join(gaps, "tx_minute", "left_semi")
-        repaired = rows.groupBy("tx_minute").agg(
-            F.count(key_col).alias("total_nb_trx_1min"),
-            F.sum(val_col).alias("total_fee_1min"),
-            F.avg(val_col).alias("avg_fee_1min"),
-        )
-        store.put_batch(repaired)
+        store.put_batch(tumbling_agg(rows, TS_COL, KEY_COL, VAL_COL))
         return n
     finally:
         gaps.unpersist()

@@ -11,9 +11,11 @@ This module keeps exactly that layout on plain parquet:
 ``put_batch`` APPENDS (atomic at file granularity — no read-modify-
 write race, unlike the Glue job's non-atomic prefix swap at
 FeatureStoreAggregateParquet.py:94-110), and the online view derives
-latest-per-key with a window function. On a Delta/Iceberg-backed
-deployment ``put_batch`` becomes ``MERGE INTO`` and ``online_view``
-a materialized latest snapshot; the API here is the contract.
+latest-per-key with a window function. A Delta/Iceberg deployment
+replaces :class:`~.storage.ParquetManifestBackend` (the format's
+transaction log is the version log): ``put_batch`` becomes ``MERGE
+INTO`` and ``online_view`` a materialized latest snapshot; the API
+here is the contract.
 
 Scale: appends are partitioned writes (no global coordination);
 the online view is one shuffle on the key. Re-delivered batches are
@@ -25,69 +27,87 @@ featurestore/main.py:54-63).
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .storage import ParquetManifestBackend, StorageBackend
+from .storage import ParquetManifestBackend
 
 __all__ = ["FeatureStore"]
 
 
 class FeatureStore:
     """All durable-storage calls go through ``backend``
-    (:class:`~.storage.StorageBackend`) — plug a Delta/Iceberg backend
-    in there when the package exists; the parquet+manifest default is
-    the tested configuration in this environment."""
+    (:class:`~.storage.ParquetManifestBackend`). The offline history
+    and the materialized latest table are both hive-partitioned by the
+    key's year/month/day/hour, as the reference's offline store is
+    (FeatureStoreAggregateParquet.py:40-58)."""
+
+    _PCOLS = ("year", "month", "day", "hour")
 
     def __init__(
-        self,
-        path: str,
-        key_col: str = "tx_minute",
-        event_time_col: str = "event_time",
-        partition_by_time: bool = True,
-        backend: StorageBackend | None = None,
+        self, path: str, key_col: str = "tx_minute", event_time_col: str = "event_time"
     ) -> None:
         self.path = path
         self.key_col = key_col
         self.event_time_col = event_time_col
-        self.partition_by_time = partition_by_time
-        self.backend = backend or ParquetManifestBackend()
+        self.backend = ParquetManifestBackend()
+
+    # -- the store's per-row rules, shared by every read and write ------
+    def _stamped(self, batch: DataFrame) -> DataFrame:
+        """Stamp ``event_time`` if absent (the reference stamps now()
+        at the sink, delivery_stream_to_featurestore/main.py:60)."""
+        if self.event_time_col in batch.columns:
+            return batch
+        return batch.withColumn(
+            self.event_time_col,
+            F.unix_timestamp(F.current_timestamp()).cast("double"),
+        )
+
+    def _with_partitions(self, batch: DataFrame) -> DataFrame:
+        """Add the year/month/day/hour partition columns of the key."""
+        k = self.key_col
+        return (
+            batch.withColumn("year", F.year(k))
+            .withColumn("month", F.month(k))
+            .withColumn("day", F.dayofmonth(k))
+            .withColumn("hour", F.hour(k))
+        )
+
+    def _latest(self, df: DataFrame, *tiebreak: str) -> DataFrame:
+        """One row per key: the last ``event_time`` wins, ties go to
+        the highest ``tiebreak`` columns (dropped from the result).
+        Ties on (key, event_time) with no tiebreak are deduped at put."""
+        w = Window.partitionBy(self.key_col).orderBy(
+            F.col(self.event_time_col).desc(), *(F.col(c).desc() for c in tiebreak)
+        )
+        return (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", *tiebreak)
+        )
+
+    def _partition_dir(self, root: str, key: tuple) -> str:
+        return os.path.join(root, *(f"{c}={v}" for c, v in zip(self._PCOLS, key)))
 
     # -- S9: streaming upsert sink ------------------------------------
     def put_batch(self, batch: DataFrame) -> None:
         """Append a batch of records (offline history). Stamps
-        ``event_time`` if absent (reference stamps now() at the sink,
-        delivery_stream_to_featurestore/main.py:60); dedups identical
-        (key, event_time) pairs within the batch so re-processing is
-        idempotent. Each put commits a versioned manifest (the added
-        file list) enabling :meth:`offline` time travel — the
-        commit-log shape a Delta/Iceberg table gets from its format
-        (on those backends this is the transaction log itself).
+        ``event_time`` if absent; dedups identical (key, event_time)
+        pairs within the batch so re-processing is idempotent. Each
+        put commits a versioned manifest (the added file list) enabling
+        :meth:`offline` time travel — the commit-log shape a
+        Delta/Iceberg table gets from its format (on those formats this
+        is the transaction log itself).
 
         Callers pass non-empty batches: each call commits exactly one
         version, so on a fresh store the n-th put is version n. The
         streaming sink counts its cached batch first and skips empty
         ones."""
-        cols = batch.columns
-        if self.event_time_col not in cols:
-            batch = batch.withColumn(
-                self.event_time_col,
-                F.unix_timestamp(F.current_timestamp()).cast("double"),
-            )
-        batch = batch.dropDuplicates([self.key_col, self.event_time_col])
-        pcols: tuple[str, ...] = ()
-        if self.partition_by_time:
-            # reference partitions the offline store year/month/day/hour
-            # (FeatureStoreAggregateParquet.py:40-58)
-            batch = (
-                batch.withColumn("year", F.year(self.key_col))
-                .withColumn("month", F.month(self.key_col))
-                .withColumn("day", F.dayofmonth(self.key_col))
-                .withColumn("hour", F.hour(self.key_col))
-            )
-            pcols = self._PCOLS
-        added = self.backend.append(batch, self.path, pcols)
+        batch = self._stamped(batch).dropDuplicates([self.key_col, self.event_time_col])
+        added = self.backend.append(self._with_partitions(batch), self.path, self._PCOLS)
         self.backend.commit_version(self.path, added)
 
     def versions(self) -> list[int]:
@@ -128,18 +148,8 @@ class FeatureStore:
     # -- online face ------------------------------------------------
     def online_view(self, spark: SparkSession) -> DataFrame:
         """Latest record per key (the online store's get_record
-        semantics; last event_time wins, ties broken deterministically
-        by taking the max over remaining columns is avoided — ties on
-        (key, event_time) are already deduped at put)."""
-        df = self.offline(spark)
-        w = Window.partitionBy(self.key_col).orderBy(
-            F.col(self.event_time_col).desc()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        semantics; the last event_time wins)."""
+        return self._latest(self.offline(spark))
 
     def as_of(self, spark: SparkSession, event_time_cutoff: float) -> DataFrame:
         """Point-in-time view: latest record per key with event_time <=
@@ -147,16 +157,10 @@ class FeatureStore:
         join input (SageMaker offline stores are queried this way to
         avoid feature leakage; here it is one filter + the same
         latest-per-key window)."""
-        df = self.offline(spark).filter(
-            F.col(self.event_time_col) <= F.lit(event_time_cutoff)
-        )
-        w = Window.partitionBy(self.key_col).orderBy(
-            F.col(self.event_time_col).desc()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        return self._latest(
+            self.offline(spark).filter(
+                F.col(self.event_time_col) <= F.lit(event_time_cutoff)
+            )
         )
 
     def get_record(self, spark: SparkSession, key_value) -> list:
@@ -168,8 +172,6 @@ class FeatureStore:
         )
 
     # -- S12: compaction ---------------------------------------------
-    _PCOLS = ("year", "month", "day", "hour")
-
     def _partition_sizes(self) -> dict[tuple, int]:
         """On-disk parquet bytes per hive partition — a metadata
         listing, bounded by partition count (the reference's prefix
@@ -208,34 +210,25 @@ class FeatureStore:
         and the history is never mutated in place."""
         df = self.offline(spark)
         tmp = self.path.rstrip("/") + ".__compact_tmp"
-        sizes = self._partition_sizes()
-        partitioned = self.partition_by_time and any(
-            len(k) == len(self._PCOLS) for k in sizes
+        n_map = [
+            (*key, int(max(1, -(-b // target_bytes))))  # ceil (A9)
+            for key, b in self._partition_sizes().items()
+        ]
+        nmap_df = spark.createDataFrame(
+            n_map, "year int, month int, day int, hour int, _nf int"
         )
-        if partitioned:
-            n_map = [
-                (*key, int(max(1, -(-b // target_bytes))))
-                for key, b in sizes.items()
-            ]
-            nmap_df = spark.createDataFrame(
-                n_map, "year int, month int, day int, hour int, _nf int"
+        (
+            df.join(F.broadcast(nmap_df), list(self._PCOLS), "left")
+            .withColumn(
+                "_salt",
+                F.pmod(F.hash(self.key_col), F.coalesce("_nf", F.lit(1))),
             )
-            (
-                df.join(F.broadcast(nmap_df), list(self._PCOLS), "left")
-                .withColumn(
-                    "_salt",
-                    F.pmod(F.hash(self.key_col), F.coalesce("_nf", F.lit(1))),
-                )
-                .repartition(*self._PCOLS, "_salt")
-                .drop("_nf", "_salt")
-                .write.partitionBy(*self._PCOLS)
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-        else:
-            total = sum(sizes.values())
-            n_files = int(max(1, -(-total // target_bytes)))  # ceil (A9)
-            df.repartition(n_files).write.mode("overwrite").parquet(tmp)
+            .repartition(*self._PCOLS, "_salt")
+            .drop("_nf", "_salt")
+            .write.partitionBy(*self._PCOLS)
+            .mode("overwrite")
+            .parquet(tmp)
+        )
         self.backend.swap_directory(tmp, self.path)
         # compaction rewrites history: the commit log restarts at a
         # single full snapshot (the VACUUM/checkpoint analogue —
@@ -270,32 +263,9 @@ class FeatureStore:
         maps the feature group here; SURVEY.md §1.1). Returns the list
         of rewritten partition directories. Re-applying the same batch
         is a no-op on values (idempotent, T5)."""
-        import shutil
-
-        if self.event_time_col not in batch.columns:
-            batch = batch.withColumn(
-                self.event_time_col,
-                F.unix_timestamp(F.current_timestamp()).cast("double"),
-            )
-        # batch-local latest per key; ties beyond event_time are
-        # already deduped at source (same contract as put_batch)
-        w = Window.partitionBy(self.key_col).orderBy(
-            F.col(self.event_time_col).desc()
-        )
-        batch = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not self.partition_by_time:
-            return self._upsert_whole(spark, batch)
-
-        batch = (
-            batch.withColumn("year", F.year(self.key_col))
-            .withColumn("month", F.month(self.key_col))
-            .withColumn("day", F.dayofmonth(self.key_col))
-            .withColumn("hour", F.hour(self.key_col))
-        )
+        # batch-local latest per key, then the merge with the touched
+        # partitions' current rows (on a tie the batch row wins)
+        batch = self._with_partitions(self._latest(self._stamped(batch)))
         # driver holds one tuple per TOUCHED partition — bounded by the
         # batch's key spread, not the table (the MERGE pruning set)
         touched = sorted(
@@ -303,37 +273,25 @@ class FeatureStore:
             for r in batch.select(*self._PCOLS).distinct().collect()
         )
         lp = self.latest_path
-        live_dirs = {
-            key: os.path.join(
-                lp, *(f"{c}={v}" for c, v in zip(self._PCOLS, key))
-            )
-            for key in touched
-        }
+        live_dirs = {key: self._partition_dir(lp, key) for key in touched}
         # Concurrent writers: the read-merge-swap below is a critical
         # section — two writers merging into the same key-partition
         # would each read the pre-merge state and the second swap would
         # silently drop the first writer's updates (lost update).  The
-        # backend's exclusive() serializes writers per table (a no-op
-        # on transactional formats, whose MERGE commit detects the
-        # conflict instead); the staging dir is writer-unique so even
-        # a misbehaving concurrent caller can't clobber it.
-        import uuid
-
+        # backend's exclusive() serializes writers per table (a
+        # transactional format's MERGE commit detects the conflict
+        # instead); the staging dir is writer-unique so even a
+        # misbehaving concurrent caller can't clobber it.
         tmp = lp + f".__upsert_tmp-{uuid.uuid4().hex}"
         with self.backend.exclusive(lp):
             existing = [d for d in live_dirs.values() if os.path.isdir(d)]
             if existing:
                 current = spark.read.option("basePath", lp).parquet(*existing)
-                merged = current.withColumn("_pri", F.lit(0)).unionByName(
-                    batch.withColumn("_pri", F.lit(1))
-                )
-                w2 = Window.partitionBy(self.key_col).orderBy(
-                    F.col(self.event_time_col).desc(), F.col("_pri").desc()
-                )
-                merged = (
-                    merged.withColumn("__rn", F.row_number().over(w2))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn", "_pri")
+                merged = self._latest(
+                    current.withColumn("_pri", F.lit(0)).unionByName(
+                        batch.withColumn("_pri", F.lit(1))
+                    ),
+                    "_pri",
                 )
             else:
                 merged = batch
@@ -345,40 +303,10 @@ class FeatureStore:
             )
             rewritten = []
             for key, live in live_dirs.items():
-                tdir = os.path.join(
-                    tmp, *(f"{c}={v}" for c, v in zip(self._PCOLS, key))
-                )
+                tdir = self._partition_dir(tmp, key)
                 if not os.path.isdir(tdir):
                     continue  # batch rows all lost to older-than-store keys
                 self.backend.swap_directory(tdir, live)
                 rewritten.append(live)
         shutil.rmtree(tmp, ignore_errors=True)
         return rewritten
-
-    def _upsert_whole(self, spark: SparkSession, batch: DataFrame) -> list[str]:
-        """Unpartitioned fallback: MERGE over the whole (small) table
-        with one atomic directory swap, serialized against concurrent
-        writers by the backend's table lock (see upsert_latest)."""
-        import uuid
-
-        lp = self.latest_path
-        tmp = lp + f".__upsert_tmp-{uuid.uuid4().hex}"
-        with self.backend.exclusive(lp):
-            if os.path.isdir(lp):
-                current = self.backend.read(spark, lp)
-                merged = current.withColumn("_pri", F.lit(0)).unionByName(
-                    batch.withColumn("_pri", F.lit(1))
-                )
-                w2 = Window.partitionBy(self.key_col).orderBy(
-                    F.col(self.event_time_col).desc(), F.col("_pri").desc()
-                )
-                merged = (
-                    merged.withColumn("__rn", F.row_number().over(w2))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn", "_pri")
-                )
-            else:
-                merged = batch
-            merged.write.mode("overwrite").parquet(tmp)
-            self.backend.swap_directory(tmp, lp)
-        return [lp]

@@ -50,15 +50,18 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..operators.windows import tumbling_agg
 from .feature_store import FeatureStore
 
 __all__ = ["StreamingPipeline", "PipelineConfig"]
 
 STATE_PARTITIONS = 1  # ~400 tx/min: 3 h of dedup is ~72k hashes, the window <= 3 open minutes
+# the transaction's dedup key, event time and fee (resources/flink/main.py:105-120)
+KEY_COL, TS_COL, VAL_COL = "hash", "tx_time", "fee"
+DEDUP_WATERMARK = "3 hours"  # T6: data-ingestion-stack.ts:75
 
 
 @dataclass
@@ -66,10 +69,6 @@ class PipelineConfig:
     feature_path: str
     checkpoint_root: str
     bronze_path: str
-    key_col: str = "hash"
-    ts_col: str = "tx_time"
-    val_col: str = "fee"
-    dedup_watermark: str = "3 hours"   # T6: data-ingestion-stack.ts:75
     agg_watermark: str = "60 seconds"  # T1: resources/flink/main.py:77
     window: str = "1 minute"           # T2: resources/flink/main.py:108-112
 
@@ -83,29 +82,16 @@ class StreamingPipeline:
     # -- stage transforms (independently testable) ---------------------
     def deduped(self, source: DataFrame) -> DataFrame:
         """P1/J1: exactly-once within the 3 h horizon."""
-        c = self.config
         return source.withWatermark(
-            c.ts_col, c.dedup_watermark
-        ).dropDuplicatesWithinWatermark([c.key_col])
+            TS_COL, DEDUP_WATERMARK
+        ).dropDuplicatesWithinWatermark([KEY_COL])
 
     def aggregated(self, bronze: DataFrame) -> DataFrame:
         """A1-A5 on the deduped stream; append-mode emission when the
         watermark passes the window end (Flink finalized windows)."""
         c = self.config
-        return (
-            bronze.withWatermark(c.ts_col, c.agg_watermark)
-            .groupBy(F.window(F.col(c.ts_col), c.window).alias("w"))
-            .agg(
-                F.count(c.key_col).alias("total_nb_trx_1min"),
-                F.sum(c.val_col).alias("total_fee_1min"),
-                F.avg(c.val_col).alias("avg_fee_1min"),
-            )
-            .select(
-                F.col("w.start").alias("tx_minute"),
-                "total_nb_trx_1min",
-                "total_fee_1min",
-                "avg_fee_1min",
-            )
+        return tumbling_agg(
+            bronze.withWatermark(TS_COL, c.agg_watermark), TS_COL, KEY_COL, VAL_COL, c.window
         )
 
     # -- query 1: dedup -> bronze --------------------------------------

@@ -1,19 +1,20 @@
-"""Storage-format seam for the feature store.
+"""Durable storage for the feature store.
 
 Everything :class:`~.feature_store.FeatureStore` does to DURABLE
-storage goes through this interface: appending data files, committing
-a version to the log, listing/reading files as of a version, and the
-atomic directory swaps that compaction/upsert use. The default
-:class:`ParquetManifestBackend` implements it on plain parquet plus a
-JSON manifest log (the only format available in this environment).
+storage goes through :class:`ParquetManifestBackend`: appending data
+files, committing a version to the log, listing/reading files as of a
+version, the table lock, and the atomic directory swaps that
+compaction/upsert use. It implements them on plain parquet plus a JSON
+manifest log (the only table format available in this environment).
 
-A Delta or Iceberg backend is a drop-in: ``append`` becomes the
-format's transactional write (the manifest commit collapses into it —
-those formats ARE their commit log), ``read_version`` becomes
-``VERSION AS OF``, and the swap primitives become MERGE /
-replaceWhere metadata commits instead of directory renames. The
-reference's analogous seam is SageMaker's offline-store S3 layout
-(lib/sagemaker/feature-store.ts:186-193).
+A Delta or Iceberg deployment REPLACES this class rather than plugging
+in behind an interface: ``append`` becomes the format's transactional
+write (the manifest commit collapses into it — those formats ARE their
+commit log), ``files_as_of`` becomes ``VERSION AS OF``, the table lock
+disappears into the format's optimistic commit, and the swap
+primitives become MERGE / replaceWhere metadata commits instead of
+directory renames. The reference's analogous layer is SageMaker's
+offline-store S3 layout (lib/sagemaker/feature-store.ts:186-193).
 """
 
 from __future__ import annotations
@@ -24,77 +25,17 @@ import os
 import shutil
 import time
 import uuid
-from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["StorageBackend", "ParquetManifestBackend"]
+__all__ = ["ParquetManifestBackend"]
 
 
-class StorageBackend(ABC):
-    """Format-level operations beneath the feature store. All paths
-    are table roots or absolute file/dir paths inside them."""
-
-    @abstractmethod
-    def append(self, df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> list[str]:
-        """Append ``df``'s rows as new data files; returns the
-        relative paths of the files added by THIS write."""
-
-    @abstractmethod
-    def read(self, spark: SparkSession, path: str, files: list[str] | None = None) -> DataFrame:
-        """Read the table (or, when ``files`` is given, exactly those
-        relative data files with the table root as basePath)."""
-
-    @abstractmethod
-    def commit_version(self, path: str, added: list[str]) -> int:
-        """Record a new version whose content is ``added`` (relative
-        file paths); returns the version number."""
-
-    @abstractmethod
-    def versions(self, path: str) -> list[int]:
-        """Committed versions, oldest first."""
-
-    @abstractmethod
-    def files_as_of(self, path: str, version: int) -> list[str]:
-        """Relative data files making up the table as of ``version``."""
-
-    @abstractmethod
-    def list_data_files(self, path: str) -> set[str]:
-        """Relative paths of all current data files."""
-
-    @abstractmethod
-    def exists(self, path: str) -> bool:
-        """True if the table has any data."""
-
-    @abstractmethod
-    def swap_directory(self, tmp: str, live: str) -> None:
-        """Atomically replace directory ``live`` with ``tmp``
-        (readers see old or new, never a mix beyond one rename)."""
-
-    @contextlib.contextmanager
-    def exclusive(self, path: str, timeout_s: float = 60.0):
-        """Mutual exclusion for a read-merge-swap critical section on
-        ``path``.  Transactional formats (Delta/Iceberg) don't need
-        it — their commit protocol detects write conflicts and retries
-        the MERGE — so the base implementation is a no-op; the plain-
-        parquet backend overrides it with a filesystem lock."""
-        yield
-
-    @abstractmethod
-    def vacuum(self, path: str, keep_versions: int = 10) -> dict:
-        """Table maintenance (the Delta VACUUM + checkpoint analogue):
-        delete ORPHAN data files (on disk but never committed — failed
-        or abandoned writes), and CHECKPOINT the commit log so only the
-        last ``keep_versions`` versions remain time-travelable (older
-        manifests squash into one cumulative checkpoint; the content of
-        every retained version is unchanged).  Returns
-        ``{"orphans_removed": [...], "manifests_squashed": n}``."""
-
-
-class ParquetManifestBackend(StorageBackend):
+class ParquetManifestBackend:
     """Plain parquet + ``_manifests/`` JSON commit log. Manifests live
     INSIDE the table root: Spark/Hadoop scans skip underscore-prefixed
-    paths, so the log is invisible to readers that don't ask for it."""
+    paths, so the log is invisible to readers that don't ask for it.
+    All paths are table roots or absolute file/dir paths inside them."""
 
     def _manifest_dir(self, path: str) -> str:
         return os.path.join(path, "_manifests")
@@ -105,7 +46,8 @@ class ParquetManifestBackend(StorageBackend):
         risk) are moved into the table.  The returned 'added' list is
         exactly the files THIS writer moved — a plain before/after
         directory diff would attribute a concurrent writer's files to
-        this commit and double-count them across manifests."""
+        this commit and double-count them across manifests.  Returns
+        the relative paths of the files added by THIS write."""
         stage = path.rstrip("/") + f".__stage-{uuid.uuid4().hex}"
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -129,6 +71,8 @@ class ParquetManifestBackend(StorageBackend):
         return sorted(added)
 
     def read(self, spark: SparkSession, path: str, files: list[str] | None = None) -> DataFrame:
+        """Read the table (or, when ``files`` is given, exactly those
+        relative data files with the table root as basePath)."""
         if files is None:
             return spark.read.parquet(path)
         return spark.read.option("basePath", path).parquet(
@@ -163,6 +107,7 @@ class ParquetManifestBackend(StorageBackend):
                 os.remove(tmp)
 
     def versions(self, path: str) -> list[int]:
+        """Committed versions, oldest first."""
         mdir = self._manifest_dir(path)
         if not os.path.isdir(mdir):
             return []
@@ -173,6 +118,7 @@ class ParquetManifestBackend(StorageBackend):
         )
 
     def files_as_of(self, path: str, version: int) -> list[str]:
+        """Relative data files making up the table as of ``version``."""
         files: list[str] = []
         for v in self.versions(path):
             if v > version:
@@ -193,12 +139,15 @@ class ParquetManifestBackend(StorageBackend):
         return out
 
     def exists(self, path: str) -> bool:
+        """True if the table has any data."""
         return os.path.isdir(path) and any(
             n.endswith(".parquet") or n.startswith(("year=", "part-"))
             for n in os.listdir(path)
         )
 
     def swap_directory(self, tmp: str, live: str) -> None:
+        """Replace directory ``live`` with ``tmp`` by two renames
+        (readers see old or new, never a mix beyond one rename)."""
         old = live.rstrip("/") + f".__old-{uuid.uuid4().hex}"
         if os.path.isdir(live):
             os.rename(live, old)
@@ -212,9 +161,9 @@ class ParquetManifestBackend(StorageBackend):
         serializes read-merge-swap writers on the same table.  A crash
         inside the critical section leaves the lock dir behind; the
         timeout raises rather than deadlocking, and the error names
-        the stale dir to remove.  On an object store this whole
-        primitive disappears into the table format's optimistic commit
-        (see the base class)."""
+        the stale dir to remove.  On a transactional table format this
+        whole primitive disappears into the format's optimistic commit,
+        which detects write conflicts and retries the MERGE."""
         lock = path.rstrip("/") + ".__lock"
         os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
         deadline = time.monotonic() + timeout_s
@@ -235,7 +184,15 @@ class ParquetManifestBackend(StorageBackend):
             os.rmdir(lock)
 
     def vacuum(self, path: str, keep_versions: int = 10) -> dict:
-        """Driver-side METADATA operation: both the orphan diff and
+        """Table maintenance (the Delta VACUUM + checkpoint analogue):
+        delete ORPHAN data files (on disk but never committed — failed
+        or abandoned writes), and CHECKPOINT the commit log so only the
+        last ``keep_versions`` versions remain time-travelable (older
+        manifests squash into one cumulative checkpoint; the content of
+        every retained version is unchanged).  Returns
+        ``{"orphans_removed": [...], "manifests_squashed": n}``.
+
+        A driver-side METADATA operation: both the orphan diff and
         the log squash touch file LISTS (bounded by file count), never
         file contents — on an object store this is one LIST plus
         manifest rewrites.  A production deployment adds an age guard

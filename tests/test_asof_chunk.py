@@ -61,19 +61,18 @@ def test_asof_join_semantics(spark):
 
 
 def test_feature_store_as_of(spark, tmp_path):
-    store = FeatureStore(
-        str(tmp_path / "fs_asof"), key_col="k", event_time_col="et", partition_by_time=False
-    )
+    store = FeatureStore(str(tmp_path / "fs_asof"), key_col="k", event_time_col="et")
+    a, b = "2024-01-01 00:01:00", "2024-01-01 01:02:00"
     store.put_batch(
         spark.createDataFrame(
-            [("a", 1.0, 10.0), ("a", 5.0, 50.0), ("b", 3.0, 30.0)],
-            "k string, et double, v double",
-        )
+            [(a, 1.0, 10.0), (a, 5.0, 50.0), (b, 3.0, 30.0)],
+            "k_str string, et double, v double",
+        ).select(F.to_timestamp("k_str").alias("k"), "et", "v")
     )
-    at2 = {r["k"]: r["v"] for r in store.as_of(spark, 2.0).collect()}
-    assert at2 == {"a": 10.0}  # b not yet written, a's v=50 in the future
-    at9 = {r["k"]: r["v"] for r in store.as_of(spark, 9.0).collect()}
-    assert at9 == {"a": 50.0, "b": 30.0}
+    at2 = {str(r["k"]): r["v"] for r in store.as_of(spark, 2.0).collect()}
+    assert at2 == {a: 10.0}  # b not yet written, a's v=50 in the future
+    at9 = {str(r["k"]): r["v"] for r in store.as_of(spark, 9.0).collect()}
+    assert at9 == {a: 50.0, b: 30.0}
 
 
 def test_chunk_greedy_packing(spark):

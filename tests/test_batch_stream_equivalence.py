@@ -7,6 +7,11 @@ The only allowed difference: streaming emits a window only once the
 watermark passes it (Flink-style finalized windows, pipeline.py), so
 the tail windows within [max_ts - watermark, max_ts] may be absent
 from the streaming side. Everything emitted must match batch exactly.
+
+The gap backfill shares the streaming aggregate's definition
+(``tumbling_agg``): backfilling an empty store from the pipeline's own
+bronze gives every streamed window again, plus only tail windows the
+stream has not finalized yet.
 """
 
 from __future__ import annotations
@@ -15,6 +20,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mlops_realtime_data_ingestion_spark.sources.batch import load_table
+from mlops_realtime_data_ingestion_spark.streaming.backfill import backfill_gaps
+from mlops_realtime_data_ingestion_spark.streaming.feature_store import FeatureStore
 from tests.test_streaming import _pipeline, _typed_stream
 
 
@@ -70,4 +77,16 @@ def test_streaming_backlog_equals_batch_agg(spark, tmp_path):
     # unfinalized tail (watermark = 60s behind max event time)
     missing = set(batch_rows) - set(streamed)
     for ts in missing:
+        assert (max_ts - ts).total_seconds() <= 120, (ts, max_ts)
+
+    # the backfill over the same bronze reproduces every streamed window
+    filled = FeatureStore(str(tmp_path / "backfilled"))
+    backfill_gaps(spark, filled, spark.read.parquet(pipe.config.bronze_path))
+    backfilled = {r["tx_minute"]: r for r in filled.online_view(spark).collect()}
+    for ts, s in streamed.items():
+        b = backfilled[ts]
+        assert b["total_nb_trx_1min"] == s["total_nb_trx_1min"]
+        assert b["total_fee_1min"] == pytest.approx(s["total_fee_1min"], rel=1e-12)
+        assert b["avg_fee_1min"] == pytest.approx(s["avg_fee_1min"], rel=1e-12)
+    for ts in set(backfilled) - set(streamed):
         assert (max_ts - ts).total_seconds() <= 120, (ts, max_ts)

@@ -42,10 +42,7 @@ def test_concurrent_put_batch_no_double_count(spark, tmp_path):
     only its own files (a before/after directory diff attributes the
     other writer's files to both commits), and the offline read must
     hold every row exactly once."""
-    fs = FeatureStore(
-        str(tmp_path / "fs"), key_col="k", event_time_col="et",
-        partition_by_time=False,
-    )
+    fs = FeatureStore(str(tmp_path / "fs"), key_col="k", event_time_col="et")
 
     def put(i):
         rows = [(f"2024-01-01 0{i}:0{j}:00", 1.0, float(10 * i + j)) for j in range(5)]

@@ -149,31 +149,41 @@ def test_late_data_dropped_beyond_watermark(spark, tmp_path):
     assert online2[0] == 5  # unchanged: late row dropped from the window
 
 
+def _keyed(spark, rows):
+    """(key, et, v) feature rows with timestamp keys: the store
+    partitions by the key's year/month/day/hour."""
+    return spark.createDataFrame(rows, "k_str string, et double, v double").select(
+        F.to_timestamp("k_str").alias("k"), "et", "v"
+    )
+
+
+A, B = "2024-01-01 00:01:00", "2024-01-01 01:02:00"
+
+
 def test_feature_store_upsert_and_point_read(spark, tmp_path):
-    store = FeatureStore(str(tmp_path / "fs"), key_col="k", event_time_col="et", partition_by_time=False)
-    df1 = spark.createDataFrame([("a", 1.0, 10.0), ("b", 1.0, 20.0)], "k string, et double, v double")
-    df2 = spark.createDataFrame([("a", 2.0, 11.0)], "k string, et double, v double")
-    store.put_batch(df1)
-    store.put_batch(df2)
-    online = {r["k"]: r["v"] for r in store.online_view(spark).collect()}
-    assert online == {"a": 11.0, "b": 20.0}  # last event_time wins (T5)
+    store = FeatureStore(str(tmp_path / "fs"), key_col="k", event_time_col="et")
+    store.put_batch(_keyed(spark, [(A, 1.0, 10.0), (B, 1.0, 20.0)]))
+    store.put_batch(_keyed(spark, [(A, 2.0, 11.0)]))
+    online = {str(r["k"]): r["v"] for r in store.online_view(spark).collect()}
+    assert online == {A: 11.0, B: 20.0}  # last event_time wins (T5)
     assert store.offline(spark).count() == 3  # history append-only
-    rec = store.get_record(spark, "a")
+    rec = store.get_record(spark, A)
     assert len(rec) == 1 and rec[0]["v"] == 11.0
 
 
 def test_feature_store_compaction(spark, tmp_path):
-    store = FeatureStore(str(tmp_path / "fsc"), key_col="k", event_time_col="et", partition_by_time=False)
+    store = FeatureStore(str(tmp_path / "fsc"), key_col="k", event_time_col="et")
     for i in range(5):
-        store.put_batch(
-            spark.createDataFrame([(f"k{i}", float(i), float(i))], "k string, et double, v double")
-        )
+        store.put_batch(_keyed(spark, [(f"2024-01-01 0{i % 2}:0{i}:00", float(i), float(i))]))
     before = store.offline(spark).collect()
     store.compact(spark, target_bytes=1 << 30)
     after = store.offline(spark).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
-    files = [f for f in os.listdir(store.path) if f.endswith(".parquet")]
-    assert len(files) == 1  # coalesced to ceil(size/target) = 1
+    part_dirs = glob.glob(os.path.join(store.path, "year=*", "month=*", "day=*", "hour=*"))
+    assert len(part_dirs) == 2  # hours 0 and 1
+    for d in part_dirs:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1  # each partition coalesced to ceil(size/target) = 1
 
 
 def test_monitoring_alarm_and_threshold(spark):

@@ -61,37 +61,3 @@ def test_compaction_restarts_log_with_snapshot(spark, tmp_path):
     assert store.versions() == [0, 1]
     assert store.offline(spark, version=0).count() == 3
     assert store.offline(spark, version=1).count() == 4
-
-
-def test_storage_backend_seam_is_honored(spark, tmp_path):
-    """FeatureStore routes every durable-storage operation through its
-    backend — a Delta/Iceberg implementation is a drop-in. A recording
-    subclass of the parquet backend must see the calls."""
-    from mlops_realtime_data_ingestion_spark.streaming.storage import (
-        ParquetManifestBackend,
-    )
-
-    calls = []
-
-    class Recording(ParquetManifestBackend):
-        def append(self, df, path, partition_by=()):
-            calls.append("append")
-            return super().append(df, path, partition_by)
-
-        def commit_version(self, path, added):
-            calls.append("commit")
-            return super().commit_version(path, added)
-
-        def read(self, spark_, path, files=None):
-            calls.append("read")
-            return super().read(spark_, path, files)
-
-    store = FeatureStore(
-        str(tmp_path / "seam"), key_col="k", event_time_col="et",
-        backend=Recording(),
-    )
-    store.put_batch(_batch(spark, [("2024-01-01 00:01:00", 1.0, 1.0)]))
-    assert calls[:2] == ["append", "commit"]
-    assert store.offline(spark).count() == 1
-    assert "read" in calls
-    assert store.versions() == [0]

@@ -88,18 +88,3 @@ def test_upsert_latest_rewrites_only_touched_partitions(spark, tmp_path):
     ups.upsert_latest(spark, tie)
     row = [r for r in ups.latest(spark).collect() if r["k"].hour == 2]
     assert len(row) == 1 and row[0]["v"] == 99.0
-
-
-def test_upsert_latest_unpartitioned(spark, tmp_path):
-    ups = FeatureStore(
-        str(tmp_path / "flat"), key_col="k", event_time_col="et",
-        partition_by_time=False,
-    )
-    d1 = spark.createDataFrame(
-        [("a", 1.0, 10.0), ("b", 1.0, 20.0)], "k string, et double, v double"
-    )
-    d2 = spark.createDataFrame([("a", 2.0, 11.0)], "k string, et double, v double")
-    ups.upsert_latest(spark, d1)
-    ups.upsert_latest(spark, d2)
-    got = {r["k"]: r["v"] for r in ups.latest(spark).collect()}
-    assert got == {"a": 11.0, "b": 20.0}
