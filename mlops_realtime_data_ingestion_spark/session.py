@@ -87,6 +87,24 @@ def get_spark(
         # which the Spark parquet reader rejects; read nanos as long and
         # convert in sources.batch.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Local-profile line, like master: without native libhadoop the
+        # default FileContext checkpoint manager's rename forks
+        # `readlink` (getFileLinkStatus on the source and destination of
+        # the file and of its .crc, 8 forks per file) on every offsets,
+        # commits, source-log, sink-log and state write. On a local path
+        # both managers write a temp file and rename it (FileContext
+        # checks the destination then renames, non-atomic; FileSystem
+        # checks exists then ChecksumFileSystem.rename, POSIX renames of
+        # the file and its .crc), so the guarantees are the same.
+        # Session-wide because a source log is built from the session
+        # that called readStream. Checksums stay on. The manager is not
+        # recorded in a checkpoint, so old checkpoints resume. A cluster
+        # on HDFS or an object store keeps Spark's default.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if extra_conf:
         # Applied at BUILDER time so static app configs (spark.ui.*)

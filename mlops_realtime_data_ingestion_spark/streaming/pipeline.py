@@ -12,13 +12,16 @@ conditional put, 3 h TTL) -> Kinesis -> {Firehose raw archive, Flink
                             -> groupBy(window 1min).agg(count,sum,avg)
                             -> foreachBatch FeatureStore.put_batch (S9)
 
-Two queries, not one: Spark allows a single watermark definition per
-stream, and the reference genuinely runs two different event-time
-horizons — 3 h dedup TTL (data-ingestion-stack.ts:75) vs 60 s window
-lateness (resources/flink/main.py:77). The bronze hop between them is
-the exact analogue of the reference's Kinesis "ingestion" stream
-between the dedup Lambda and Flink — and doubles as the raw archive
-(Firehose->S3, data-ingestion-stack.ts:102-122).
+Two queries, not one: a query may have several watermark operators,
+but it has one global watermark (their minimum by default,
+``spark.sql.streaming.multipleWatermarkPolicy``), and the reference
+genuinely runs two different event-time horizons — 3 h dedup TTL
+(data-ingestion-stack.ts:75) vs 60 s window lateness
+(resources/flink/main.py:77) — which cannot both drive emission in one
+query. The bronze hop between them is the exact analogue of the
+reference's Kinesis "ingestion" stream between the dedup Lambda and
+Flink — and doubles as the raw archive (Firehose->S3,
+data-ingestion-stack.ts:102-122).
 
 Semantics mapping (SURVEY.md §2.8):
 - T1 watermark 60 s: late rows beyond it are dropped from windows.

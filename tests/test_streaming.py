@@ -302,3 +302,62 @@ def test_restart_keeps_checkpointed_partition_count(spark, tmp_path, monkeypatch
             assert '"spark.sql.shuffle.partitions":"3"' in f.read(), (query, last)
     got = {r["tx_minute"].minute: r["total_nb_trx_1min"] for r in pipe.store.online_view(spark).collect()}
     assert got[0] == 4 and got[11] == 4, got
+
+
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_filesystem_checkpoint_manager_keeps_checksums(spark, tmp_path):
+    """The session resolves checkpoint paths to the FileSystem-based
+    manager, and a run still writes Hadoop's and Spark's checksum files."""
+    src = tmp_path / "src_mgr"
+    src.mkdir()
+    _write_jsonl(str(src / "a.jsonl"), [_event(i, i * 0.5) for i in range(6)] + [_event(99, 10.0)])
+    pipe = _pipeline(tmp_path, "mgr")
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
+
+    chk = os.path.join(pipe.config.checkpoint_root, "bronze")
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(chk), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    if mgr.getClass().getName() == _CHECKPOINTING + "ChecksumCheckpointFileManager":
+        field = mgr.getClass().getDeclaredField("underlyingFileMgr")
+        field.setAccessible(True)
+        mgr = field.get(mgr)
+    assert mgr.getClass().getName() == _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+
+    for name in ("offsets/.0.crc", "state/0/0/1.delta.crc", "state/0/0/.1.delta.crc"):
+        assert os.path.isfile(os.path.join(chk, name)), name
+
+
+def test_restart_from_filecontext_checkpoint(spark, tmp_path):
+    """A checkpoint written under Spark's default FileContext manager
+    resumes under the session's manager: a restart with no new input
+    commits no store version, and new input finalizes each new window
+    exactly once."""
+    src = tmp_path / "src_fc"
+    src.mkdir()
+    _write_jsonl(str(src / "a.jsonl"), [_event(i, i * 0.3, 5.0) for i in range(10)] + [_event(90, 10.0)])
+    prev = spark.conf.get(_MANAGER_CONF)
+    spark.conf.set(_MANAGER_CONF, _CHECKPOINTING + "FileContextBasedCheckpointFileManager")
+    try:
+        _pipeline(tmp_path, "fc").run(_typed_stream(spark, str(src)), available_now=True)
+    finally:
+        spark.conf.set(_MANAGER_CONF, prev)
+
+    pipe = _pipeline(tmp_path, "fc")
+    versions = pipe.store.versions()
+    assert versions
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
+    assert pipe.store.versions() == versions
+
+    _write_jsonl(str(src / "b.jsonl"), [_event(100 + i, 11 + i * 0.3, 7.0) for i in range(10)] + [_event(91, 20.0)])
+    pipe.run(_typed_stream(spark, str(src)), available_now=True)
+    assert len(pipe.store.versions()) > len(versions)
+    history = pipe.store.offline(spark).groupBy("tx_minute").agg(
+        F.count("*").alias("emits"), F.first("total_nb_trx_1min").alias("n")
+    )
+    got = {r["tx_minute"].minute: (r["emits"], r["n"]) for r in history.collect()}
+    assert got == {0: (1, 4), 1: (1, 3), 2: (1, 3), 10: (1, 1), 11: (1, 4), 12: (1, 3), 13: (1, 3)}, got
