@@ -17,25 +17,39 @@ transaction log is the version log): ``put_batch`` becomes ``MERGE
 INTO`` and ``online_view`` a materialized latest snapshot; the API
 here is the contract.
 
-Scale: appends are partitioned writes (no global coordination);
-the online view is one shuffle on the key. Re-delivered batches are
-harmless — the same (key, event_time) row wins deterministically
-(T5: at-least-once + idempotent upsert, delivery_stream_to_
-featurestore/main.py:54-63).
+Scale: a put is driver-sized. One Spark job reads the batch into
+Arrow (one partition: no shuffle, and no per-call literal, so no new
+generated code after the first put) and the driver writes one parquet
+file per touched hour, with no Hadoop output committer. The store holds
+one row per minute key, about 525k rows for a year of backfill, so the
+driver is big enough; :meth:`FeatureStore.compact` stays a distributed
+Spark rewrite, and the online view is one shuffle on the key.
+Re-delivered batches are harmless — the same (key, event_time) row
+wins deterministically (T5: at-least-once + idempotent upsert,
+delivery_stream_to_featurestore/main.py:54-63).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .storage import ParquetManifestBackend
 
 __all__ = ["FeatureStore"]
+
+
+def _now_s() -> float:
+    """The sink's ``event_time`` stamp: wall-clock time in whole
+    seconds, as a double — the value ``unix_timestamp(current_timestamp())``
+    gives."""
+    return float(int(time.time()))
 
 
 class FeatureStore:
@@ -61,19 +75,13 @@ class FeatureStore:
         at the sink, delivery_stream_to_featurestore/main.py:60)."""
         if self.event_time_col in batch.columns:
             return batch
-        return batch.withColumn(
-            self.event_time_col,
-            F.unix_timestamp(F.current_timestamp()).cast("double"),
-        )
+        return batch.withColumn(self.event_time_col, F.lit(_now_s()))
 
     def _with_partitions(self, batch: DataFrame) -> DataFrame:
         """Add the year/month/day/hour partition columns of the key."""
         k = self.key_col
-        return (
-            batch.withColumn("year", F.year(k))
-            .withColumn("month", F.month(k))
-            .withColumn("day", F.dayofmonth(k))
-            .withColumn("hour", F.hour(k))
+        return batch.withColumns(
+            {"year": F.year(k), "month": F.month(k), "day": F.dayofmonth(k), "hour": F.hour(k)}
         )
 
     def _latest(self, df: DataFrame, *tiebreak: str) -> DataFrame:
@@ -96,18 +104,30 @@ class FeatureStore:
     def put_batch(self, batch: DataFrame) -> None:
         """Append a batch of records (offline history). Stamps
         ``event_time`` if absent; dedups identical (key, event_time)
-        pairs within the batch so re-processing is idempotent. Each
-        put commits a versioned manifest (the added file list) enabling
-        :meth:`offline` time travel — the commit-log shape a
-        Delta/Iceberg table gets from its format (on those formats this
-        is the transaction log itself).
+        pairs within the batch so re-processing is idempotent (a
+        stamped batch shares one stamp, so there the key alone is the
+        rule). Each put commits a versioned manifest (the added file
+        list) enabling :meth:`offline` time travel — the commit-log
+        shape a Delta/Iceberg table gets from its format (on those
+        formats this is the transaction log itself).
+
+        One Spark job reads the batch into Arrow on the driver — one
+        partition, so the dedup needs no shuffle, and no per-call
+        literal, so repeated puts reuse the generated code — and the
+        backend writes the parquet files there. Driver-sized by design:
+        the store holds one row per minute key, about 525k rows for a
+        year of backfill; :meth:`compact` stays a distributed rewrite.
 
         Callers pass non-empty batches: each call commits exactly one
         version, so on a fresh store the n-th put is version n. The
         streaming sink counts its cached batch first and skips empty
         ones."""
-        batch = self._stamped(batch).dropDuplicates([self.key_col, self.event_time_col])
-        added = self.backend.append(self._with_partitions(batch), self.path, self._PCOLS)
+        stamp = self.event_time_col not in batch.columns
+        subset = [self.key_col] if stamp else [self.key_col, self.event_time_col]
+        table = self._with_partitions(batch.coalesce(1).dropDuplicates(subset)).toArrow()
+        if stamp:
+            table = table.append_column(self.event_time_col, pa.repeat(_now_s(), table.num_rows))
+        added = self.backend.append(table, self.path, self._PCOLS)
         self.backend.commit_version(self.path, added)
 
     def versions(self) -> list[int]:

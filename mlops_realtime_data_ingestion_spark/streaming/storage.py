@@ -26,6 +26,9 @@ import shutil
 import time
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["ParquetManifestBackend"]
@@ -40,34 +43,40 @@ class ParquetManifestBackend:
     def _manifest_dir(self, path: str) -> str:
         return os.path.join(path, "_manifests")
 
-    def append(self, df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> list[str]:
-        """Stage-then-move append: the write lands in a private staging
-        dir and its part files (task-UUID-unique names, no collision
-        risk) are moved into the table.  The returned 'added' list is
-        exactly the files THIS writer moved — a plain before/after
-        directory diff would attribute a concurrent writer's files to
-        this commit and double-count them across manifests.  Returns
-        the relative paths of the files added by THIS write."""
-        stage = path.rstrip("/") + f".__stage-{uuid.uuid4().hex}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(stage)
+    def append(self, table: pa.Table, path: str, partition_by: tuple[str, ...]) -> list[str]:
+        """Write ``table`` into the table at ``path`` on the driver: one
+        pyarrow parquet file per distinct ``partition_by`` value, in
+        that value's hive directory and without the partition columns.
+        Each file is written under a dot-prefixed temp name (readers
+        and :meth:`list_data_files` skip it) and renamed into place
+        with ``os.replace``, so a reader sees a whole file or none.
+        Names are UUID-unique, so concurrent writers never collide.
+        Driver-sized by design: the feature store holds one row per
+        minute key, about 525k rows for a year of backfill. Returns the
+        relative paths of exactly the files THIS write added (a
+        before/after directory diff would attribute a concurrent
+        writer's files to this commit)."""
+        cols = list(partition_by)
+        rows_of = (
+            table.select(cols)
+            .append_column("_row", pa.array(np.arange(table.num_rows)))
+            .group_by(cols, use_threads=False)
+            .aggregate([("_row", "list")])
+        )
+        data = table.drop_columns(cols)
         added: list[str] = []
-        try:
-            for root, dirs, files in os.walk(stage):
-                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-                for f in files:
-                    if not f.endswith(".parquet"):
-                        continue
-                    src = os.path.join(root, f)
-                    rel = os.path.relpath(src, stage)
-                    dst = os.path.join(path, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.replace(src, dst)
-                    added.append(rel)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        for group in rows_of.to_pylist():
+            part_dir = os.path.join(*(f"{c}={group[c]}" for c in cols))
+            name = f"part-{uuid.uuid4().hex}.parquet"
+            os.makedirs(os.path.join(path, part_dir), exist_ok=True)
+            tmp = os.path.join(path, part_dir, f".{name}.tmp")
+            try:
+                pq.write_table(data.take(group["_row_list"]), tmp)
+                os.replace(tmp, os.path.join(path, part_dir, name))
+            finally:
+                if os.path.exists(tmp):
+                    os.remove(tmp)  # a failed write leaves no partial file
+            added.append(os.path.join(part_dir, name))
         return sorted(added)
 
     def read(self, spark: SparkSession, path: str, files: list[str] | None = None) -> DataFrame:
@@ -112,7 +121,7 @@ class ParquetManifestBackend:
         if not os.path.isdir(mdir):
             return []
         return sorted(
-            int(n[1:7])
+            int(n[1:-5])
             for n in os.listdir(mdir)
             if n.startswith("v") and n.endswith(".json")
         )

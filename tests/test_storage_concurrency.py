@@ -1,6 +1,6 @@
 """Multi-writer safety for the parquet+manifest backend (the gap vs
 Delta/Iceberg closed in round 4): optimistic CAS on manifest commits,
-stage-then-move appends, and a table lock serializing the
+UUID-named appends renamed into place, and a table lock serializing the
 read-merge-swap upsert critical section."""
 
 from __future__ import annotations
@@ -100,3 +100,20 @@ def test_concurrent_upsert_latest_no_lost_update(spark, tmp_path):
         if "__upsert_tmp" in n or ".__lock" in n or ".__old" in n
     ]
     assert leftovers == []
+
+
+def test_versions_past_six_digits(tmp_path):
+    """Version numbers outgrow the zero-padded width: v1000000 is
+    1,000,000 (not 100000), and the next commit is 1,000,001."""
+    b = ParquetManifestBackend()
+    path = str(tmp_path / "t")
+    mdir = os.path.join(path, "_manifests")
+    os.makedirs(mdir)
+    for v in (999_999, 1_000_000):
+        with open(os.path.join(mdir, f"v{v:06d}.json"), "w") as f:
+            json.dump({"version": v, "added": [f"f{v}.parquet"]}, f)
+    assert sorted(os.listdir(mdir)) == ["v1000000.json", "v999999.json"]
+    assert b.versions(path) == [999_999, 1_000_000]
+    assert b.files_as_of(path, 1_000_000) == ["f999999.parquet", "f1000000.parquet"]
+    assert b.commit_version(path, ["g.parquet"]) == 1_000_001
+    assert b.versions(path)[-1] == 1_000_001
